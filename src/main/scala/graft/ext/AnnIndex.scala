@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.SegmentedArtifact.{Family, OneFile, PartitionedBy, Version,
+  union}
 import graft.ops.Windows
 
 /** Durable IVF-PQ ANN index — the production lifecycle around
@@ -26,12 +28,9 @@ import graft.ops.Windows
   * commit pays zero catalog jobs); `path/segments/c<v>/` holds the
   * corpus CODE segments — (vec_id, icell, s, cid), m rows per vector,
   * PARTITIONED BY `icell` so a probe-restricted query prunes unprobed
-  * cells at the directory level. Commits follow the
-  * segment-incremental versioned-pointer
-  * discipline ([[graft.ops.Staging]], same as [[DupGraph]]): a
-  * [[refresh]]ed index written back to its root emits ONLY the new
-  * batch's code segment; the manifest lists live segments; unreferenced
-  * segments are swept with their last referencing version.
+  * cells at the directory level. Commits go through
+  * [[graft.ops.SegmentedArtifact]]: a [[refresh]]ed index written back
+  * to its root emits ONLY the new batch's code segment.
   *
   * ==Determinism contract==
   * Encoding is a pure per-vector function of (vector, centroids,
@@ -65,7 +64,7 @@ final class AnnIndex private[ext] (
   private[ext] lazy val codeSegs: Seq[DataFrame] = mkCodeSegs()
 
   /** The full code table (union view of [[codeSegs]]). */
-  lazy val codes: DataFrame = codeSegs.reduce(_.unionByName(_))
+  lazy val codes: DataFrame = union(codeSegs)
 
   /** IVF-PQ top-k from the artifact: probe each query's `nprobe`
     * nearest cells, ADC-score ONLY the probed cells' code rows (the
@@ -97,11 +96,10 @@ final class AnnIndex private[ext] (
     // per-segment probe joins: each partitioned segment scan prunes to
     // the probed icell dirs under the broadcast join (dynamic partition
     // pruning); the union is of candidate-sized frames, never corpus
-    val cand = codeSegs.map(seg =>
+    val cand = union(codeSegs.map(seg =>
         seg.join(broadcast(probes), Seq("icell"))
           .filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id"), col("s"), col("cid")))
-      .reduce(_.unionByName(_))
+          .select(col("qid"), col("vec_id"), col("s"), col("cid"))))
     val scored = cand
       .join(broadcast(lut), Seq("qid", "s", "cid"))
       .groupBy("qid", "vec_id")
@@ -144,15 +142,14 @@ final class AnnIndex private[ext] (
         l.deltas :+ (() => if (ckForced) deltaCk else delta))))
   }
 
-  /** Commit the index under `path` (versioned pointer + immutable code
-    * segments; see the class doc). An index whose [[lineage]] roots at
-    * this same `path` commits ONLY its unwritten deltas — per-batch
-    * commit bytes follow the batch (m code cells per new vector), not
-    * the corpus — and REUSES the stored centroid/codebook segments
-    * (they are frozen between retrains, so an ingest commit pays zero
-    * catalog jobs). A fresh train writes both catalogs, in parallel
-    * (two independent tiny jobs; serializing them doubles the fixed
-    * commit latency that bounds streaming ingest frequency).
+  /** Commit the index under `path`
+    * ([[graft.ops.SegmentedArtifact.commit]]). An index whose
+    * [[lineage]] roots at this same `path` commits ONLY its unwritten
+    * deltas — per-batch commit bytes follow the batch (m code cells
+    * per new vector), not the corpus — and REUSES the stored
+    * centroid/codebook segments (frozen between retrains, so an ingest
+    * commit pays zero catalog jobs). A fresh train writes code and both
+    * catalogs concurrently.
     *
     * Returns the COMMITTED view of the artifact: the same catalog
     * frames, code segments re-opened from the files just written
@@ -160,73 +157,29 @@ final class AnnIndex private[ext] (
     * immediate [[AnnIndex.read]] (spec-pinned), so a refresh→serve
     * pipeline skips the re-open round trip.
     *
-    * `retain` flows to the pointer commit (the [[DupGraph.compact]]
-    * rule): a write that is the SECOND commit of one streaming fold —
-    * an in-fold [[AnnIndex.retrain]] after the ingest commit — must
-    * pass `retain = 2` so a fold-current reader still resolves
-    * complete segments.
+    * `retain` flows to the pointer commit: a write that is the SECOND
+    * commit of one streaming fold — an in-fold [[AnnIndex.retrain]]
+    * after the ingest commit — must pass `retain = 2` so a
+    * fold-current reader still resolves complete segments.
     */
   def write(path: String, batchId: Option[Long] = None,
             retain: Int = 1,
             store: graft.ops.PointerStore =
               graft.ops.PointerStore.File): AnnIndex = {
-    val spark = centroids.sparkSession
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    val lin = lineage.filter(_.root == path)
-    // STALE-HANDLE GUARD: a lineage-rooted commit re-REFERENCES stored
-    // segments instead of rewriting them, so a handle held across more
-    // commits than the writers' retention (the artifact retrained or
-    // compacted past this reader's window) could otherwise publish a
-    // manifest pointing at already-swept files — a loudly-failing read
-    // path today, but a BRICKED pointer after the swap. Refuse BEFORE
-    // any write: the check is O(segments) metadata.
-    lin.foreach { l =>
-      val refs = l.csegs ++ l.centSeg ++ l.pqSeg
-      val missing = refs.filterNot(sid =>
-        graft.ops.Staging.exists(AnnIndex.segDir(path, sid)))
-      require(missing.isEmpty,
-        s"AnnIndex.write: this handle references segments " +
-          s"[${missing.mkString(", ")}] that no longer exist at $path — " +
-          "the artifact was retrained/compacted past this reader's " +
-          "retention window. Re-read the index and re-apply the batch.")
+    import AnnIndex.{Cent, Code, Pq}
+    val lin = lineage.filter(_.base.root == path)
+    val puts = lin match {
+      case Some(l) if l.deltas.nonEmpty =>
+        Seq(Code -> (() => union(l.deltas.map(_()))))
+      case Some(_) => Nil
+      case None => Seq(Code -> (() => codes), Cent -> (() => centroids),
+        Pq -> (() => pqCent))
     }
-    val catalogsStored = lin.flatMap(l => l.centSeg.zip(l.pqSeg))
-    // one concurrent batch for everything this commit must put on
-    // disk: the code segment plus (fresh-train generations only) the
-    // two catalog segments — they share only immutable lazy-checkpoint
-    // inputs, and the ladder's fixed latency is the streaming
-    // ingest-frequency bound
-    val codeJob: () => Unit = lin match {
-      case Some(l) if l.deltas.nonEmpty => () =>
-        AnnIndex.writeCodeSegment(
-          l.deltas.map(_()).reduce(_.unionByName(_)), path, s"c$v")
-      case Some(_) => () => ()
-      case None => () => AnnIndex.writeCodeSegment(codes, path, s"c$v")
-    }
-    val catJobs: Seq[() => Unit] =
-      if (catalogsStored.isDefined) Seq.empty // frozen: reuse, no jobs
-      else Seq(
-        () => AnnIndex.writeCatalogSegment(centroids, path, s"n$v"),
-        () => AnnIndex.writeCatalogSegment(pqCent, path, s"b$v"))
-    AnnIndex.parJobs(codeJob +: catJobs: _*)
-    val csegs = lin match {
-      case Some(l) if l.deltas.nonEmpty => l.csegs :+ s"c$v"
-      case Some(l) => l.csegs
-      case None => Seq(s"c$v")
-    }
-    val (centSeg, pqSeg) = catalogsStored.getOrElse((s"n$v", s"b$v"))
-    graft.ops.Staging.writeManifest(dir,
-      Map("m" -> m.toString, "subDim" -> subDim.toString,
-        "fmt" -> AnnIndex.FormatVersion, "csegs" -> csegs.mkString(","),
-        "centseg" -> centSeg, "pqseg" -> pqSeg) ++
-        batchId.map("batchId" -> _.toString))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    graft.ops.Staging.gcSegments(path, AnnIndex.SegKeys, store = store)
+    val c = AnnIndex.Spec.commit(path, store, retain, lin.map(_.base),
+      batchId, Map("m" -> m.toString, "subDim" -> subDim.toString), puts)
     new AnnIndex(centroids, pqCent,
-      () => csegs.map(sid => AnnIndex.openCodeSegment(spark, path, sid)),
-      m, subDim,
-      lineage = Some(AnnIndex.Lineage(path, csegs, Some(centSeg),
-        Some(pqSeg), deltas = Seq.empty)))
+      () => AnnIndex.codeSegments(centroids.sparkSession, c), m, subDim,
+      lineage = Some(AnnIndex.Lineage(c, deltas = Nil)))
   }
 }
 
@@ -238,76 +191,26 @@ object AnnIndex {
     */
   val FormatVersion = "ivfpq/v1"
 
-  private[ext] final case class Lineage(root: String,
-                                        csegs: Seq[String],
-                                        centSeg: Option[String],
-                                        pqSeg: Option[String],
+  /** Code segments per ingest; catalog segments per train generation,
+    * shared by every ingest commit of that generation.
+    */
+  private val Code = Family("csegs", "c", PartitionedBy("icell"))
+  private val Cent = Family("centseg", "n", OneFile)
+  private val Pq = Family("pqseg", "b", OneFile)
+  private[graft] val Spec = new graft.ops.SegmentedArtifact(
+    "AnnIndex", "fmt", FormatVersion, Seq(Code, Cent, Pq))
+
+  private[ext] final case class Lineage(base: Version,
                                         deltas: Seq[() => DataFrame])
 
-  /** Every manifest key that pins segments — GC must union all three
-    * (code segments per ingest; catalog segments per train generation,
-    * shared across every ingest commit of that generation).
-    */
-  private[ext] val SegKeys: Seq[String] = Seq("csegs", "centseg", "pqseg")
-
-  private def segDir(root: String, segId: String): String =
-    s"$root/segments/$segId"
-
-  /** Run independent commit jobs concurrently — one shared audited
-    * copy for all three artifact lifecycles ([[graft.ops.Staging.parJobs]]).
-    */
-  private[ext] def parJobs(jobs: (() => Unit)*): Unit =
-    graft.ops.Staging.parJobs(jobs: _*)
-
-  private def writeCodeSegment(df: DataFrame, root: String,
-                               segId: String): Unit = {
-    val dir = segDir(root, segId)
-    // deterministic segment ids: a crash-retry overwrites exactly its
-    // own debris (same discipline as DupGraph.writeIndexSegment)
-    graft.ops.Staging.deleteTree(dir)
-    // Pre-repartition on icell (the DupGraph writeIndexSegment
-    // discipline): without it every input partition opens a writer per
-    // cell it touches — partitions × cells tiny files, the classic
-    // small-files tax on every later probe read — where one batch-sized
-    // shuffle leaves one file per cell per task.
-    df.repartition(col("icell")).write.partitionBy("icell").parquet(dir)
-    // An EMPTY partitioned write emits zero data files (only _SUCCESS)
-    // — unreadable later. Empty deltas are legitimate (a micro-batch of
-    // all-null embeddings encodes nothing) but RARE, so instead of a
-    // pre-write emptiness probe (an extra job on every ingest commit),
-    // detect emptiness from the write's own output — no icell=… dirs, a
-    // metadata listing — and rewrite as plain zero-row parquet, which
-    // keeps the full schema (icell as a regular column, which the
-    // reader selects either way) and stays readable.
-    if (!graft.ops.Staging.list(dir).exists(_.startsWith("icell="))) {
-      graft.ops.Staging.deleteTree(dir)
-      df.limit(0).coalesce(1).write.parquet(dir)
-    }
-  }
-
-  /** Catalog-sized tables (k·dim doubles): one file each — writing a
-    * few-hundred-row catalog through 32 shuffle partitions costs 32
-    * write tasks now and 32 footer reads on every later open. Stored
-    * as SEGMENTS (not per-version tables) because they are frozen
-    * between retrains: every ingest commit of a generation references
-    * the same pair, so refresh commits pay zero catalog jobs.
-    */
-  private def writeCatalogSegment(df: DataFrame, root: String,
-                                  segId: String): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir)
-    df.coalesce(1).write.parquet(dir)
-  }
-
-  private def openCodeSegment(spark: SparkSession, root: String,
-                              sid: String): DataFrame =
-    spark.read.parquet(segDir(root, sid))
+  private def codeSegments(spark: SparkSession, c: Version): Seq[DataFrame] =
+    Spec.segments(spark, c, Code).map(
       // partitionBy wrote icell as a directory column — restore the
       // stored column order AND the bigint type (partition inference
       // may narrow small cell ids to int, which would miscompile the
       // probe join's key comparison)
-      .select(col("vec_id"), col("icell").cast("long").as("icell"),
-        col("s"), col("cid"))
+      _.select(col("vec_id"), col("icell").cast("long").as("icell"),
+        col("s"), col("cid")))
 
   /** Train the artifact: `lloydIters` spherical-k-means passes over
     * seeded IVF centroids ([[Similarity.kmeansRefine]] — exact
@@ -343,7 +246,7 @@ object AnnIndex {
     // independent threads).
     var cent: DataFrame = null
     var pq: DataFrame = null
-    parJobs(
+    graft.ops.Staging.parJobs(
       () => nonEmpty(ivfSeeds, "ivfSeedPred"),
       () => nonEmpty(corpus.filter(pqSeedPred), "pqSeedPred"),
       () => cent = Similarity.centroidFrame(
@@ -387,37 +290,22 @@ object AnnIndex {
     */
   def read(spark: SparkSession, path: String,
            store: graft.ops.PointerStore =
-             graft.ops.PointerStore.File): AnnIndex = {
-    val v = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed ANN index at $path (missing LATEST)"))
-    val dir = graft.ops.Staging.versionDir(path, v)
-    val mf = graft.ops.Staging.readManifest(dir)
-    mf.get("fmt").filter(_ != FormatVersion).foreach(f =>
-      sys.error(s"ANN index at $path encoded under '$f'; this build " +
-        s"speaks '$FormatVersion' — rebuild, do not refresh"))
-    val csegs = graft.ops.Staging.segList(mf, "csegs")
-    // catalog location: segment-shared since the commit-floor trim
-    // (manifest keys centseg/pqseg); per-version table dirs on legacy
-    // artifacts — those upgrade to catalog segments on the next commit
-    def catalog(key: String, legacyDir: String): DataFrame =
-      mf.get(key) match {
-        case Some(sid) => spark.read.parquet(segDir(path, sid))
-        case None => spark.read.parquet(s"$dir/$legacyDir")
-      }
+             graft.ops.PointerStore.File): AnnIndex =
+    at(spark, Spec.open(path, store))
+
+  private[graft] def at(spark: SparkSession, c: Version): AnnIndex =
     new AnnIndex(
-      catalog("centseg", "centroids"),
-      catalog("pqseg", "pqcent"),
-      () => csegs.map(sid => openCodeSegment(spark, path, sid)),
-      m = mf("m").toInt, subDim = mf("subDim").toInt,
-      lineage = Some(Lineage(path, csegs, mf.get("centseg"),
-        mf.get("pqseg"), deltas = Seq.empty)))
-  }
+      spark.read.parquet(Spec.segDir(c.root, c(Cent.key))),
+      spark.read.parquet(Spec.segDir(c.root, c(Pq.key))),
+      () => codeSegments(spark, c),
+      m = c("m").toInt, subDim = c("subDim").toInt,
+      lineage = Some(Lineage(c, deltas = Nil)))
 
   /** True iff a complete committed version exists at `path`. */
   def exists(path: String,
              store: graft.ops.PointerStore =
                graft.ops.PointerStore.File): Boolean =
-    graft.ops.Staging.currentVersion(path, store).isDefined
+    Spec.exists(path, store)
 
   /** The last streaming batch id folded into the committed index, if
     * the writer recorded one ([[DupGraph.lastBatchId]]'s contract —
@@ -426,10 +314,7 @@ object AnnIndex {
   def lastBatchId(path: String,
                   store: graft.ops.PointerStore =
                     graft.ops.PointerStore.File): Option[Long] =
-    graft.ops.Staging.currentVersion(path, store).flatMap { v =>
-      graft.ops.Staging.readManifest(graft.ops.Staging.versionDir(path, v))
-        .get("batchId").map(_.toLong)
-    }
+    Spec.lastBatchId(path, store)
 
   /** Retrain the artifact at `path` from the current corpus VECTORS
     * (supplied by the caller — PQ codes are lossy, so the vectors come
@@ -460,53 +345,20 @@ object AnnIndex {
               lloydIters: Int = 2, retain: Int = 1,
               store: graft.ops.PointerStore =
                 graft.ops.PointerStore.File): AnnIndex = {
-    val v0 = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed ANN index at $path (missing LATEST)"))
-    val mf = graft.ops.Staging.readManifest(
-      graft.ops.Staging.versionDir(path, v0))
-    mf.get("fmt").filter(_ != FormatVersion).foreach(f =>
-      sys.error(s"ANN index at $path encoded under '$f'; this build " +
-        s"speaks '$FormatVersion' — rebuild, do not retrain"))
-    train(corpus, mf("m").toInt, mf("subDim").toInt,
+    val c = Spec.open(path, store)
+    train(corpus, c("m").toInt, c("subDim").toInt,
       ivfSeedPred, pqSeedPred, lloydIters)
-      .write(path, batchId = mf.get("batchId").map(_.toLong),
-        retain = retain, store = store)
+      .write(path, batchId = c.batchId, retain = retain, store = store)
   }
 
-  /** Fold a multi-segment artifact back to one code segment (the
-    * [[DupGraph.compact]] discipline: explicit, separate from ingest;
-    * no-op when already compact). `retain = 2` when compaction runs in
-    * the same fold as an ingest commit (see [[DupGraph.compact]]).
+  /** Fold a multi-segment artifact back to one code segment
+    * ([[graft.ops.SegmentedArtifact.compact]]); the catalog segments
+    * carry forward (frozen between retrains).
     */
   def compact(spark: SparkSession, path: String, retain: Int = 1,
               store: graft.ops.PointerStore =
-                graft.ops.PointerStore.File): Unit = {
-    val v0 = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed ANN index at $path (missing LATEST)"))
-    val dir0 = graft.ops.Staging.versionDir(path, v0)
-    val mf = graft.ops.Staging.readManifest(dir0)
-    val csegs = graft.ops.Staging.segList(mf, "csegs")
-    if (csegs.size <= 1) return
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    writeCodeSegment(
-      csegs.map(sid => openCodeSegment(spark, path, sid))
-        .reduce(_.unionByName(_)), path, s"c$v")
-    // catalogs: carry the segment references forward (frozen between
-    // retrains — compaction folds only code segments); a legacy
-    // artifact's per-version catalog dirs upgrade to segments here
-    val (centSeg, pqSeg) = (mf.get("centseg"), mf.get("pqseg")) match {
-      case (Some(cs), Some(ps)) => (cs, ps)
-      case _ =>
-        parJobs(
-          () => writeCatalogSegment(
-            spark.read.parquet(s"$dir0/centroids"), path, s"n$v"),
-          () => writeCatalogSegment(
-            spark.read.parquet(s"$dir0/pqcent"), path, s"b$v"))
-        (s"n$v", s"b$v")
+                graft.ops.PointerStore.File): Unit =
+    Spec.compact(path, retain, store) { c =>
+      Seq(Code -> (() => union(codeSegments(spark, c))))
     }
-    graft.ops.Staging.writeManifest(dir, (mf - "csegs") ++
-      Map("csegs" -> s"c$v", "centseg" -> centSeg, "pqseg" -> pqSeg))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    graft.ops.Staging.gcSegments(path, SegKeys, store = store)
-  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ext.TextHash._
+import graft.ops.SegmentedArtifact.{Bucketed, Family, Version, union}
 
 /** Large-scale document deduplication operators ([EXT]).
   *
@@ -570,24 +571,13 @@ object Dedup {
   def refreshDupGraph(stored: DupGraph, newDocs: DataFrame, text: Column,
                       id: Column, n: Int = -1,
                       threshold: Double = -1.0): DupGraph = {
-    // Manifest-backed graphs validate caller parameters against the
-    // recorded build values. For a PRE-MANIFEST artifact the stored
-    // values are library-default guesses — the caller is the only
-    // authority on what the artifact was actually built with, so their
-    // explicit parameters win (rejecting them against a guess would
-    // make a correctly-parameterized legacy graph un-refreshable).
-    if (stored.paramsDeclared) {
-      require(n == -1 || n == stored.n,
-        s"refresh shingle width $n != stored graph's ${stored.n} " +
-          "(mixing widths joins incompatible shingle spaces)")
-      require(threshold == -1.0 || threshold == stored.threshold,
-        s"refresh threshold $threshold != stored graph's ${stored.threshold} " +
-          "(mixing thresholds breaks refresh == rebuild)")
-    }
-    val nn = if (!stored.paramsDeclared && n != -1) n else stored.n
-    val tt = if (!stored.paramsDeclared && threshold != -1.0) threshold
-             else stored.threshold
-    val shNew = shingleIndex(newDocs, text, id, nn).persist()
+    require(n == -1 || n == stored.n,
+      s"refresh shingle width $n != stored graph's ${stored.n} " +
+        "(mixing widths joins incompatible shingle spaces)")
+    require(threshold == -1.0 || threshold == stored.threshold,
+      s"refresh threshold $threshold != stored graph's ${stored.threshold} " +
+        "(mixing thresholds breaks refresh == rebuild)")
+    val shNew = shingleIndex(newDocs, text, id, stored.n).persist()
     // Cross pairs are computed PER STORED SEGMENT: every document's
     // shingles live wholly inside its arrival segment, so a (new, old)
     // pair's intersection count is complete within the old doc's
@@ -596,9 +586,10 @@ object Dedup {
     // is shared across all of them (ReusedExchange).
     val crossPairs = stored.indexSegs
       .map(seg => jaccardFromIntersections(
-        indexCrossIntersections(shNew, seg), tt))
+        indexCrossIntersections(shNew, seg), stored.threshold))
       .reduce(_.unionByName(_))
-    val newPairs = jaccardFromIntersections(indexSelfIntersections(shNew), tt)
+    val newPairs = jaccardFromIntersections(indexSelfIntersections(shNew),
+      stored.threshold)
       .unionByName(crossPairs)
       .persist()
     val seedEdges = stored.clusters
@@ -626,12 +617,7 @@ object Dedup {
       .select(col("doc_id"), col("cluster_id"))
     new DupGraph(stored.pairs.unionByName(newPairs), clusters,
       () => stored.indexSegs :+ shNew, owned = Seq(newPairs, shNew),
-      n = nn, threshold = tt,
-      // a refresh of a pre-manifest graph stays UNDECLARED unless the
-      // caller supplied both parameters explicitly — otherwise a later
-      // write would stamp guesses into the manifest as truth
-      paramsDeclared = stored.paramsDeclared ||
-        (n != -1 && threshold != -1.0),
+      n = stored.n, threshold = stored.threshold,
       // thread the durable ancestry through: a later write() back to
       // the same root commits ONLY these deltas as new segments
       lineage = stored.lineage.map(l => l.copy(
@@ -1271,14 +1257,6 @@ final class DupGraph private[ext] (val pairs: DataFrame,
                                    owned: Seq[DataFrame],
                                    val n: Int,
                                    val threshold: Double,
-                                   /** False only for a graph read from a
-                                     * pre-manifest artifact: `n` and
-                                     * `threshold` are then library-default
-                                     * GUESSES, and refresh lets explicit
-                                     * caller parameters override them
-                                     * instead of validating against a
-                                     * guess. */
-                                   private[ext] val paramsDeclared: Boolean = true,
                                    /** Durable ancestry: set iff this graph
                                      * is backed by a stored artifact, so
                                      * [[write]] back to the same root can
@@ -1300,15 +1278,16 @@ final class DupGraph private[ext] (val pairs: DataFrame,
   /** The full shingle inverted index (doc_id, s, sz) — the union view
     * of [[indexSegs]], for consumers that want one frame.
     */
-  lazy val index: DataFrame = indexSegs.reduce(_.unionByName(_))
+  lazy val index: DataFrame = union(indexSegs)
 
   /** Persist the graph for cross-job sharing under `path`: immutable
     * index/pairs/cluster-delta SEGMENTS under `path/segments/` + a
-    * per-version manifest under `path/vN`. A daily-crawl
-    * pipeline writes day-1's graph once; day-2 reads it back
-    * ([[DupGraph.read]]) and folds the new batch in with
-    * [[Dedup.refreshDupGraph]] — the stored corpus is never
-    * re-enumerated, and (new in r15) never re-WRITTEN either.
+    * per-version manifest under `path/vN`, committed through
+    * [[graft.ops.SegmentedArtifact]]. A daily-crawl pipeline writes
+    * day-1's graph once; day-2 reads it back ([[DupGraph.read]]) and
+    * folds the new batch in with [[Dedup.refreshDupGraph]] — the
+    * stored corpus is never re-enumerated, and never re-WRITTEN
+    * either.
     *
     * ==Segment-incremental commits (the 100 TB commit cost)==
     * A graph whose [[lineage]] roots at this same `path` (read here,
@@ -1322,28 +1301,14 @@ final class DupGraph private[ext] (val pairs: DataFrame,
     * refreshes (components only grow; a grown component's min-id only
     * decreases), so [[DupGraph.read]] reconstructs the effective view
     * with one min(cluster_id)-per-doc aggregate over the layers —
-    * no last-writer bookkeeping. The version manifest lists all three
-    * segment id families; without lineage (a fresh build, or a write
-    * to a different root) the whole graph is written as one segment
-    * triple. Segment count grows one per ingested batch until
+    * no last-writer bookkeeping. Without lineage (a fresh build, or a
+    * write to a different root) the whole graph is written as one
+    * segment triple. Segment count grows one per ingested batch until
     * [[DupGraph.compact]] folds them back to one.
-    *
-    * Versioned-pointer commit ([[graft.ops.Staging]]): segments and
-    * the version dir are fully written BEFORE one atomic pointer swap
-    * (`path/LATEST`) publishes the version. A crash at ANY point
-    * before the swap leaves the previous version fully intact (stale
-    * uncommitted files are cleaned on the next attempt — segment ids
-    * are deterministic per version, so retry overwrites exactly its
-    * own debris). Superseded versions are garbage-collected only
-    * after the swap, and segments are swept only when NO surviving
-    * version's manifest references them — the `retain` contract on
-    * [[DupGraph.read]] holds unchanged.
     *
     * ==Bucketed segment layout (the 100 TB refresh cost)==
     * With `buckets > 0` (default 32) every index segment is a
-    * HASH-BUCKETED, bucket-sorted table on `s`
-    * ([[graft.ops.Layout.writeBucketedTable]]) — Spark's bucket hash
-    * is the same murmur3 the shuffle uses, so a day-2
+    * HASH-BUCKETED, bucket-sorted table on `s` — a day-2
     * `indexCrossIntersections` reads every corpus-sized stored
     * segment straight from its bucket files with NO Exchange: the
     * only shuffle a refresh pays is the new batch's own index. On
@@ -1363,78 +1328,23 @@ final class DupGraph private[ext] (val pairs: DataFrame,
             batchId: Option[Long] = None,
             store: graft.ops.PointerStore =
               graft.ops.PointerStore.File): Unit = {
-    val spark = pairs.sparkSession
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    // stale-handle guard (the AnnIndex.write rule): a handle held past
-    // the writers' retention must refuse BEFORE the pointer swap, not
-    // publish a manifest referencing swept segments
-    lineage.filter(_.root == path).foreach { l =>
-      val missing = (l.isegs ++ l.psegs ++ l.clsegs).filterNot(sid =>
-        graft.ops.Staging.exists(DupGraph.segDir(path, sid)))
-      require(missing.isEmpty,
-        s"DupGraph.write: this handle references segments " +
-          s"[${missing.mkString(", ")}] that no longer exist at $path — " +
-          "the artifact was compacted past this reader's retention " +
-          "window. Re-read the graph and re-apply the batch.")
+    import DupGraph.{Clusters, Index, Pairs}
+    val lin = lineage.filter(_.base.root == path)
+    val puts = lin match {
+      case Some(l) if l.deltaIdx.nonEmpty => Seq(
+        Index -> (() => union(l.deltaIdx.map(_()))),
+        Pairs -> (() => union(l.deltaPrs)),
+        Clusters -> (() => union(l.deltaCls)))
+      case Some(_) => Nil
+      case None => Seq(Index -> (() => index), Pairs -> (() => pairs),
+        Clusters -> (() => clusters))
     }
-    // the segment writes of one commit are independent jobs over
-    // already-materialized inputs (the batch caches / cc checkpoint) —
-    // run them concurrently (graft.ops.Staging.parJobs): the serial
-    // ladder's fixed latency, not data, bounds streaming fold frequency
-    val (isegs, psegs, clsegs, b) = lineage.filter(_.root == path) match {
-      case Some(l) =>
-        // incremental commit: only the unwritten deltas become segments
-        val jobs = Seq.newBuilder[() => Unit]
-        val (is2, ps2) =
-          if (l.deltaIdx.nonEmpty) {
-            jobs += (() => DupGraph.writeIndexSegment(
-              l.deltaIdx.map(_()).reduce(_.unionByName(_)),
-              path, s"i$v", l.buckets))
-            jobs += (() => DupGraph.writePlainSegment(
-              l.deltaPrs.reduce(_.unionByName(_)), path, s"p$v"))
-            (l.isegs :+ s"i$v", l.psegs :+ s"p$v")
-          } else (l.isegs, l.psegs)
-        val cl2 =
-          if (l.clsegs.isEmpty) {
-            // upgrading an artifact whose clusters still live in a
-            // version DIR (r15-early layout): that dir ages out with
-            // retention, so the FULL current view must become the base
-            // layer — a delta alone would orphan every base assignment
-            jobs += (() => DupGraph.writePlainSegment(clusters, path, s"k$v"))
-            Seq(s"k$v")
-          } else if (l.deltaCls.nonEmpty) {
-            jobs += (() => DupGraph.writePlainSegment(
-              l.deltaCls.reduce(_.unionByName(_)), path, s"k$v"))
-            l.clsegs :+ s"k$v"
-          } else l.clsegs
-        graft.ops.Staging.parJobs(jobs.result(): _*)
-        (is2, ps2, cl2, l.buckets)
-      case None =>
-        // full commit: the whole graph as one segment triple
-        graft.ops.Staging.parJobs(
-          () => DupGraph.writeIndexSegment(index, path, s"i$v", buckets),
-          () => DupGraph.writePlainSegment(pairs, path, s"p$v"),
-          () => DupGraph.writePlainSegment(clusters, path, s"k$v"))
-        (Seq(s"i$v"), Seq(s"p$v"), Seq(s"k$v"), buckets)
-    }
-    // A pre-manifest graph's n/threshold are library-default GUESSES —
-    // stamping them into the new manifest would promote the guess to a
-    // declared value, permanently rejecting the caller's correct
-    // explicit parameters on every later refresh (and silently joining
-    // mixed shingle spaces on a param-less one). Undeclared stays
-    // undeclared until a refresh with explicit parameters declares it.
-    val params: Map[String, String] =
-      if (paramsDeclared)
-        Map("n" -> n.toString, "threshold" -> threshold.toString)
-      else Map.empty
-    graft.ops.Staging.writeManifest(dir,
-      params ++ Map(
-        "hash" -> DupGraph.HashVersion, "buckets" -> b.toString,
-        "isegs" -> isegs.mkString(","), "psegs" -> psegs.mkString(","),
-        "clsegs" -> clsegs.mkString(",")) ++
-        batchId.map("batchId" -> _.toString))
-    graft.ops.Staging.commitVersion(path, v, store = store)
-    DupGraph.gcSegments(spark, path, store)
+    DupGraph.Spec.commit(path, store, base = lin.map(_.base),
+      batchId = batchId, params = Map("n" -> n.toString,
+        "threshold" -> threshold.toString,
+        "buckets" -> lin.fold(buckets)(_.base.buckets).toString),
+      puts = puts)
+    ()
   }
 
   /** Deduplicated corpus ([[Dedup.survivors]] over the shared cluster
@@ -1479,77 +1389,35 @@ object DupGraph {
     */
   val HashVersion = "shingle48/v1"
 
-  /** Durable ancestry of a stored graph: the artifact root it was read
-    * from, the segment lists its base version's manifest declared, the
-    * artifact's bucket count, and the in-memory deltas refreshes have
-    * accumulated since (paired: one index delta + one pairs delta per
-    * refresh). [[DupGraph.write]] back to `root` commits only the
-    * deltas.
+  /** Index segments bucket on `s`; pairs and cluster deltas are never
+    * a recurring-join stored side, so they stay plain.
     */
-  private[ext] final case class Lineage(root: String,
-                                        isegs: Seq[String],
-                                        psegs: Seq[String],
-                                        clsegs: Seq[String],
-                                        buckets: Int,
+  private val Index = Family("isegs", "i", Bucketed("s"))
+  private val Pairs = Family("psegs", "p")
+  private val Clusters = Family("clsegs", "k")
+  private[graft] val Spec = new graft.ops.SegmentedArtifact(
+    "DupGraph", "hash", HashVersion, Seq(Index, Pairs, Clusters))
+
+  /** Durable ancestry of a stored graph: the committed version it was
+    * read from and the in-memory deltas refreshes have accumulated
+    * since (one index, pairs and cluster delta per refresh).
+    * [[DupGraph.write]] back to the same root commits only the deltas.
+    */
+  private[ext] final case class Lineage(base: Version,
                                         deltaIdx: Seq[() => DataFrame],
                                         deltaPrs: Seq[DataFrame],
                                         deltaCls: Seq[DataFrame])
 
-  private[ext] def segDir(root: String, segId: String): String =
-    s"$root/segments/$segId"
-
-  /** Write one immutable index segment (bucketed on `s` when
-    * `buckets > 0`). Segment ids are deterministic per version, so a
-    * crash-retry targets exactly its own debris — clean it first
-    * (bucketed CTAS refuses a non-empty location; plain parquet
-    * overwrite would merely mask the stale entry problem).
-    * The explicit pre-repartition on `s` makes each write task hold
-    * exactly one bucket (repartition's murmur3 IS the bucket hash), so
-    * every segment is one file per bucket — no tasks×buckets fan-out.
-    */
-  private def writeIndexSegment(df: DataFrame, root: String, segId: String,
-                                buckets: Int): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir)
-    graft.ops.Layout.dropBucketedEntry(df.sparkSession, dir)
-    if (buckets > 0)
-      graft.ops.Layout.writeBucketedTable(
-        df.repartition(buckets, col("s")), dir, "s", buckets)
-    else df.write.mode("overwrite").parquet(dir)
-  }
-
-  /** Write one immutable PLAIN-parquet segment (pairs and cluster
-    * deltas — neither is a recurring-join stored side, so no bucket
-    * layout; an empty frame still writes a schema-bearing file).
-    */
-  private def writePlainSegment(df: DataFrame, root: String,
-                                segId: String): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir)
-    df.write.mode("overwrite").parquet(dir)
-  }
-
-  /** Sweep segments no surviving version references (the shared
-    * [[graft.ops.Staging.gcSegments]] discipline), dropping the swept
-    * dirs' bucketed catalog entries alongside.
-    */
-  private[ext] def gcSegments(spark: org.apache.spark.sql.SparkSession,
-                              root: String,
-                              store: graft.ops.PointerStore =
-                                graft.ops.PointerStore.File): Unit =
-    graft.ops.Staging.gcSegments(root, Seq("isegs", "psegs", "clsegs"),
-      d => graft.ops.Layout.dropBucketedEntry(spark, d), store)
-
   /** Fold a multi-segment artifact back to one segment TRIPLE: union
     * all index segments into ONE bucketed segment, all pairs segments
     * into one, fold the cluster layers to their effective min-per-doc
-    * view, commit as a new version. Explicit and
-    * separate from the ingest path by design — ingest commits stay
-    * batch-sized forever and the (corpus-sized) rewrite runs on the
-    * operator's schedule, exactly like any LSM/Delta compaction. After
-    * the commit, old segments age out with their referencing versions
-    * (the usual retention sweep). No-op when already compact (unless
-    * `keepPairs = false` still has pairs to prune).
+    * view, commit as a new version
+    * ([[graft.ops.SegmentedArtifact.compact]]). Explicit and separate
+    * from the ingest path by design — ingest commits stay batch-sized
+    * forever and the (corpus-sized) rewrite runs on the operator's
+    * schedule, exactly like any LSM/Delta compaction. No-op when
+    * already compact (unless `keepPairs = false` still has pairs to
+    * prune).
     *
     * `keepPairs = false` PRUNES the pairs table down to its (empty,
     * schema-bearing) shell: pairs are the raw near-dup evidence, but
@@ -1561,65 +1429,28 @@ object DupGraph {
     * are unchanged — spec-pinned); consumers that audit raw pairs
     * should keep them.
     *
-    * `retain` flows to the pointer commit: a compaction that runs in
-    * the SAME fold as an ingest commit (the streaming maintainers'
-    * auto-compaction) must pass `retain = 2` so a reader that was
-    * current at fold start — one ingest commit plus one compact commit
-    * ago by fold end — still resolves complete segments.
+    * `retain = 2` when compaction runs in the SAME fold as an ingest
+    * commit (the streaming maintainers' auto-compaction), so a reader
+    * current at fold start still resolves complete segments.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               keepPairs: Boolean = true, retain: Int = 1,
               store: graft.ops.PointerStore =
-                graft.ops.PointerStore.File): Unit = {
-    val v0 = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed dup-graph at $path (missing LATEST)"))
-    val dir0 = graft.ops.Staging.versionDir(path, v0)
-    val mf = graft.ops.Staging.readManifest(dir0)
-    val isegs = graft.ops.Staging.segList(mf, "isegs")
-    val psegs = graft.ops.Staging.segList(mf, "psegs")
-    val clsegs = graft.ops.Staging.segList(mf, "clsegs")
-    // legacy pre-segmented layout (no isegs/psegs/clsegs keys — a
-    // single version dir holding index/pairs/clusters directly, which
-    // read() still supports): nothing to fold and nothing whose bytes
-    // grow with ingests, so compaction is a no-op rather than a crash
-    // on reduce-of-empty below
-    if (isegs.isEmpty) return
-    val compactAlready =
-      isegs.size <= 1 && psegs.size <= 1 && clsegs.size <= 1
-    if (keepPairs && compactAlready) return
-    // keepPairs=false on an already-compact artifact: re-run only if
-    // there are still pairs to prune (one cheap limit-1 probe on the
-    // single pairs segment) — a scheduled periodic prune must not pay
-    // a full corpus rewrite for zero effect every time
-    if (!keepPairs && compactAlready && psegs.nonEmpty &&
-      spark.read.parquet(segDir(path, psegs.head)).isEmpty) return
-    val buckets = mf.get("buckets").map(_.toInt).getOrElse(0)
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    val index = isegs.map(sid => spark.read.parquet(segDir(path, sid)))
-      .reduce(_.unionByName(_))
-    val foldedPairs = psegs.map(sid => spark.read.parquet(segDir(path, sid)))
-      .reduce(_.unionByName(_))
-    // the three rewrites read disjoint stored segments — concurrent
-    // (graft.ops.Staging.parJobs), same as the ingest commit's writes.
-    // pairs: limit(0), not an omitted segment — the read path stays
-    // uniform (one plain-parquet scan with the real schema) and a later
-    // refresh's unionByName against it is a no-op. clusters: folded to
-    // the effective min-per-doc view (sound because labels are monotone
-    // non-increasing, see write()).
-    graft.ops.Staging.parJobs(
-      () => writeIndexSegment(index, path, s"i$v", buckets),
-      () => writePlainSegment(
-        if (keepPairs) foldedPairs else foldedPairs.limit(0), path, s"p$v"),
-      () => writePlainSegment(
-        if (clsegs.nonEmpty) effectiveClusters(spark, path, clsegs)
-        else spark.read.parquet(s"$dir0/clusters"), // r15-early layout
-        path, s"k$v"))
-    graft.ops.Staging.writeManifest(dir,
-      (mf - "isegs" - "psegs" - "clsegs") ++
-        Map("isegs" -> s"i$v", "psegs" -> s"p$v", "clsegs" -> s"k$v"))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    gcSegments(spark, path, store)
-  }
+                graft.ops.PointerStore.File): Unit =
+    // keepPairs=false on an already-compact artifact re-runs only if
+    // there are still pairs to prune (a limit-1 probe on the single
+    // pairs segment): a scheduled prune must not pay a full corpus
+    // rewrite for zero effect every time
+    Spec.compact(path, retain, store, force = c => !keepPairs &&
+      !c.segs(Pairs).forall(sid =>
+        spark.read.parquet(Spec.segDir(path, sid)).isEmpty)) { c =>
+      // pairs: limit(0), not an omitted segment — the read path stays
+      // uniform and a later refresh's unionByName against it is a no-op
+      val prs = Spec.folded(spark, c, Pairs)
+      Seq(Index -> (() => Spec.folded(spark, c, Index)),
+        Pairs -> (() => if (keepPairs) prs else prs.limit(0)),
+        Clusters -> (() => effectiveClusters(spark, c)))
+    }
 
   /** Effective cluster view over layered delta segments: the minimum
     * label per doc — exactly the latest assignment because labels are
@@ -1627,29 +1458,22 @@ object DupGraph {
     * aggregate over the pair-graph-sized layers.
     */
   private def effectiveClusters(spark: org.apache.spark.sql.SparkSession,
-                                path: String,
-                                clsegs: Seq[String]): DataFrame =
-    clsegs.map(sid => spark.read.parquet(segDir(path, sid)))
-      .reduce(_.unionByName(_))
+                                c: Version): DataFrame =
+    Spec.folded(spark, c, Clusters)
       .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
 
   /** Re-open the LATEST committed version of a graph persisted by
     * [[DupGraph.write]]. Nothing is cached on read (parquet scans are
     * already cheap and columnar); [[Dedup.refreshDupGraph]] reads the
     * index side exactly once per batch. Build parameters, the bucket
-    * layout, and the segment lists come from the version manifest;
-    * artifacts from before the segmented layout (no `isegs` key) read
-    * through their legacy single-dir tables (and upgrade to segments
-    * on their next full write — a legacy version dir cannot serve as
-    * an immutable segment because retention deletes it). Versions
-    * predating manifests entirely fall back to the library defaults
-    * n=3, threshold=0.5, plain parquet. Throws if no version was ever
-    * committed (use [[exists]] to probe).
+    * layout, and the segment lists come from the version manifest.
+    * Throws if no version was ever committed (use [[exists]] to
+    * probe).
     *
     * ==Reader lifetime contract==
-    * The returned frames lazily scan the resolved version's files (and
-    * the segments its manifest pins — the segment sweep never deletes
-    * a segment a surviving manifest references). Each later commit
+    * The returned frames lazily scan the segments the resolved
+    * version's manifest pins (the segment sweep never deletes a
+    * segment a surviving manifest references). Each later commit
     * retains the `retain` (default 1) previous versions, so a reader
     * stays valid across that many concurrent commits; a consumer that
     * holds a graph across MORE commits than the writer's retention
@@ -1657,61 +1481,25 @@ object DupGraph {
     */
   def read(spark: org.apache.spark.sql.SparkSession, path: String,
            store: graft.ops.PointerStore =
-             graft.ops.PointerStore.File): DupGraph = {
-    val v = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed dup-graph at $path (missing LATEST)"))
-    val dir = graft.ops.Staging.versionDir(path, v)
-    val mf = graft.ops.Staging.readManifest(dir)
-    mf.get("hash").filter(_ != HashVersion).foreach(h =>
-      sys.error(s"dup-graph at $path hashed under '$h'; this build " +
-        s"speaks '$HashVersion' — rebuild, do not refresh"))
-    val buckets = mf.get("buckets").map(_.toInt).getOrElse(0)
-    // cluster table: layered delta segments (min-per-doc effective
-    // view) when the manifest lists them; the per-version table dir
-    // for r15-early and legacy artifacts. Deliberately a PURE lazy
-    // view, not checkpointed/persisted: a read handle can outlive
-    // executors (dynamic allocation) and is re-read every micro-batch
-    // by the streaming loop — truncated lineage would break on
-    // executor loss inside the promised reader-lifetime window, and
-    // per-read blocks have no deterministic release. Each action pays
-    // one union+min-aggregate over the layers; layer count is bounded
-    // by batches-since-[[compact]], which is the documented lever.
-    val clsegs = graft.ops.Staging.segList(mf, "clsegs")
-    val clusters =
-      if (clsegs.nonEmpty) effectiveClusters(spark, path, clsegs)
-      else spark.read.parquet(s"$dir/clusters")
-    val n = mf.get("n").map(_.toInt).getOrElse(3)
-    val threshold = mf.get("threshold").map(_.toDouble).getOrElse(0.5)
-    // pre-manifest artifacts carry GUESSED defaults — flag them so
-    // refresh trusts explicit caller parameters instead of rejecting
-    // them against the guess
-    val declared = mf.contains("n") && mf.contains("threshold")
-    def openIndex(d: String): DataFrame =
-      if (buckets > 0) graft.ops.Layout.readBucketedTable(spark, d, "s", buckets)
-      else spark.read.parquet(d)
-    mf.get("isegs") match {
-      case Some(is) => // segmented layout
-        val isegs = is.split(',').toSeq.filter(_.nonEmpty)
-        val psegs = graft.ops.Staging.segList(mf, "psegs")
-        new DupGraph(
-          psegs.map(sid => spark.read.parquet(segDir(path, sid)))
-            .reduce(_.unionByName(_)),
-          clusters,
-          () => isegs.map(sid => openIndex(segDir(path, sid))),
-          owned = Seq.empty, // a read graph owns no caches
-          n = n, threshold = threshold, paramsDeclared = declared,
-          lineage = Some(Lineage(path, isegs, psegs, clsegs, buckets,
-            deltaIdx = Seq.empty, deltaPrs = Seq.empty,
-            deltaCls = Seq.empty)))
-      case None => // legacy single-dir layout
-        new DupGraph(
-          spark.read.parquet(s"$dir/pairs"),
-          clusters,
-          () => Seq(openIndex(s"$dir/index")),
-          owned = Seq.empty,
-          n = n, threshold = threshold, paramsDeclared = declared)
-    }
-  }
+             graft.ops.PointerStore.File): DupGraph =
+    at(spark, Spec.open(path, store))
+
+  // The cluster table is deliberately a PURE lazy view, not
+  // checkpointed/persisted: a read handle can outlive executors
+  // (dynamic allocation) and is re-read every micro-batch by the
+  // streaming loop — truncated lineage would break on executor loss
+  // inside the promised reader-lifetime window, and per-read blocks
+  // have no deterministic release. Each action pays one union +
+  // min-aggregate over the layers; layer count is bounded by
+  // batches-since-[[compact]], which is the documented lever.
+  private[graft] def at(spark: org.apache.spark.sql.SparkSession,
+                        c: Version): DupGraph =
+    new DupGraph(Spec.folded(spark, c, Pairs), effectiveClusters(spark, c),
+      () => Spec.segments(spark, c, Index),
+      owned = Seq.empty, // a read graph owns no caches
+      n = c("n").toInt, threshold = c("threshold").toDouble,
+      lineage = Some(Lineage(c, deltaIdx = Nil, deltaPrs = Nil,
+        deltaCls = Nil)))
 
   /** True iff a complete committed version exists at `path` — the
     * restart probe for incremental loops (the pointer is written only
@@ -1720,7 +1508,7 @@ object DupGraph {
   def exists(path: String,
              store: graft.ops.PointerStore =
                graft.ops.PointerStore.File): Boolean =
-    graft.ops.Staging.currentVersion(path, store).isDefined
+    Spec.exists(path, store)
 
   /** The last streaming batch id folded into the committed graph, if
     * the writer recorded one — [[graft.streaming.StreamingDedup]]'s
@@ -1732,8 +1520,5 @@ object DupGraph {
   def lastBatchId(path: String,
                   store: graft.ops.PointerStore =
                     graft.ops.PointerStore.File): Option[Long] =
-    graft.ops.Staging.currentVersion(path, store).flatMap { v =>
-      graft.ops.Staging.readManifest(graft.ops.Staging.versionDir(path, v))
-        .get("batchId").map(_.toLong)
-    }
+    Spec.lastBatchId(path, store)
 }

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.SegmentedArtifact.{Bucketed, Family, Version, union}
+
 /** Durable banded-hamming fingerprint index — the incremental dedup
   * lifecycle for PERCEPTUAL fingerprints (image dHash, audio
   * spectro-temporal hash, video keyframe hash, text SimHash: anything
@@ -17,9 +19,8 @@ import org.apache.spark.sql.functions._
   * join is exchange-free on the (corpus-sized) stored side.
   * `path/segments/p<v>/` — the accumulated pair deltas
   * `(da, db, hamming)`, plain parquet (pairs are results, never a
-  * recurring-join build side). Commits follow the segment-incremental
-  * versioned-pointer discipline shared with [[DupGraph]] /
-  * [[AnnIndex]] / [[NoveltyIndex]]: a refreshed index written back to
+  * recurring-join build side). Commits go through
+  * [[graft.ops.SegmentedArtifact]]: a refreshed index written back to
   * its root emits ONLY the batch's index + pair delta segments —
   * per-batch commit bytes follow the batch and its TRUE new pairs,
   * never the corpus.
@@ -39,8 +40,8 @@ import org.apache.spark.sql.functions._
   * ==Scale posture==
   * Candidate cost follows band-bucket collisions, never corpus pairs;
   * the stored side of every refresh join reads straight from its
-  * bucket files (zero Exchange — the [[DupGraph]] index-segment
-  * discipline); a 100 TB media lake reduces to 8 bytes/item before
+  * bucket files (zero Exchange — a bucketed segment family); a
+  * 100 TB media lake reduces to 8 bytes/item before
   * anything shuffles, and day-2 cost follows the batch. Segment count
   * grows one per batch until [[HammingIndex.compact]] (the streaming
   * maintainer auto-compacts past a threshold).
@@ -64,15 +65,14 @@ final class HammingIndex private[ext] (
     * view costs a partition-pruned-free FILTER, never a distinct.
     */
   lazy val fingerprints: DataFrame =
-    idxSegs.map(_.filter(col("bkey") < (1L << width))
-      .select(col("doc_id"), col("fp")))
-      .reduce(_.unionByName(_))
+    union(idxSegs.map(_.filter(col("bkey") < (1L << width))
+      .select(col("doc_id"), col("fp"))))
 
   /** Every near-dup pair discovered so far (da < db, hamming <=
     * maxDist) — the union of the per-batch pair deltas, equal to
     * [[Dedup.simhashHammingPairs]] over [[fingerprints]].
     */
-  lazy val pairs: DataFrame = pairSegs.reduce(_.unionByName(_))
+  lazy val pairs: DataFrame = union(pairSegs)
 
   /** Fold a new fingerprint batch (`doc_id`, `fp`) in: the index delta
     * is the batch's banded rows; the pair delta is the batch's
@@ -115,67 +115,30 @@ final class HammingIndex private[ext] (
         pdeltas = l.pdeltas :+ (() => if (pairForced) pairCk else pairDelta))))
   }
 
-  /** Commit under `path`: a handle whose lineage roots here emits only
-    * its unwritten index + pair deltas (one segment pair per commit,
-    * crash-retry-safe deterministic ids); otherwise the full state as
-    * one segment pair. Returns the COMMITTED view (segments re-opened
-    * from the files just written — equal to an immediate
+  /** Commit under `path` ([[graft.ops.SegmentedArtifact.commit]]): a
+    * handle whose lineage roots here emits only its unwritten index +
+    * pair deltas (one segment pair per commit); otherwise the full
+    * state as one segment pair. Returns the COMMITTED view (segments
+    * re-opened from the files just written — equal to an immediate
     * [[HammingIndex.read]], spec-pinned).
     */
   def write(path: String, batchId: Option[Long] = None,
             retain: Int = 1,
             store: graft.ops.PointerStore =
               graft.ops.PointerStore.File): HammingIndex = {
-    val spark = SparkSession.active
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    val lin = lineage.filter(_.root == path)
-    // stale-handle guard (the AnnIndex.write rule)
-    lin.foreach { l =>
-      val missing = (l.isegs ++ l.psegs).filterNot(sid =>
-        graft.ops.Staging.exists(HammingIndex.segDir(path, sid)))
-      require(missing.isEmpty,
-        s"HammingIndex.write: this handle references segments " +
-          s"[${missing.mkString(", ")}] that no longer exist at $path — " +
-          "the artifact was compacted past this reader's retention " +
-          "window. Re-read the index and re-apply the batch.")
+    import HammingIndex.{Idx, Prs}
+    val lin = lineage.filter(_.base.root == path)
+    val puts = lin match {
+      case Some(l) if l.ideltas.nonEmpty => Seq(
+        Idx -> (() => union(l.ideltas.map(_()))),
+        Prs -> (() => union(l.pdeltas.map(_()))))
+      case Some(_) => Nil
+      case None => Seq(Idx -> (() => union(idxSegs)), Prs -> (() => pairs))
     }
-    val (isegs, psegs) = lin match {
-      case Some(l) if l.ideltas.nonEmpty || l.pdeltas.nonEmpty =>
-        // the two delta families are independent jobs over immutable
-        // inputs — commit them concurrently (the AnnIndex.write rule:
-        // the ladder's fixed latency bounds streaming ingest frequency)
-        graft.ops.Staging.parJobs(
-          () => HammingIndex.writeIndexSegment(
-            l.ideltas.map(_()).reduce(_.unionByName(_)), path, s"i$v",
-            buckets),
-          () => HammingIndex.writePairSegment(
-            l.pdeltas.map(_()).reduce(_.unionByName(_)), path, s"p$v"))
-        (l.isegs :+ s"i$v", l.psegs :+ s"p$v")
-      case Some(l) => (l.isegs, l.psegs)
-      case None =>
-        graft.ops.Staging.parJobs(
-          () => HammingIndex.writeIndexSegment(
-            idxSegs.reduce(_.unionByName(_)), path, s"i$v", buckets),
-          () => HammingIndex.writePairSegment(pairs, path, s"p$v"))
-        (Seq(s"i$v"), Seq(s"p$v"))
-    }
-    graft.ops.Staging.writeManifest(dir,
+    HammingIndex.at(SparkSession.active, HammingIndex.Spec.commit(path, store,
+      retain, lin.map(_.base), batchId,
       Map("maxDist" -> maxDist.toString, "bands" -> bands.toString,
-        "bits" -> bits.toString, "buckets" -> buckets.toString,
-        "fmt" -> HammingIndex.FormatVersion,
-        "isegs" -> isegs.mkString(","), "psegs" -> psegs.mkString(",")) ++
-        batchId.map("batchId" -> _.toString))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    graft.ops.Staging.gcSegments(path, HammingIndex.SegKeys,
-      d => graft.ops.Layout.dropBucketedEntry(spark, d), store)
-    new HammingIndex(
-      () => isegs.map(sid =>
-        HammingIndex.openIndexSegment(spark, path, sid, buckets)),
-      () => psegs.map(sid =>
-        spark.read.parquet(HammingIndex.segDir(path, sid))),
-      maxDist, bands, bits, buckets,
-      lineage = Some(HammingIndex.Lineage(path, isegs, psegs,
-        ideltas = Seq.empty, pdeltas = Seq.empty)))
+        "bits" -> bits.toString, "buckets" -> buckets.toString), puts))
   }
 }
 
@@ -186,16 +149,17 @@ object HammingIndex {
     */
   val FormatVersion = "hamming/v1"
 
-  private[ext] val SegKeys: Seq[String] = Seq("isegs", "psegs")
+  private val Idx = Family("isegs", "i", Bucketed("bkey"))
+  private val Prs = Family("psegs", "p")
+  private[graft] val Spec = new graft.ops.SegmentedArtifact(
+    "HammingIndex", "fmt", FormatVersion, Seq(Idx, Prs))
 
-  private[ext] final case class Lineage(root: String,
-                                        isegs: Seq[String],
-                                        psegs: Seq[String],
+  /** `base`: the committed version the handle was read from; the
+    * deltas are the refreshes applied since.
+    */
+  private[ext] final case class Lineage(base: Version,
                                         ideltas: Seq[() => DataFrame],
                                         pdeltas: Seq[() => DataFrame])
-
-  private def segDir(root: String, segId: String): String =
-    s"$root/segments/$segId"
 
   /** The banded index projection of a fingerprint frame — bkey per
     * (item, band) via the ONE shared [[Dedup.hammingBandKeys]].
@@ -228,32 +192,6 @@ object HammingIndex {
     }.reduceOption(_.unionByName(_))
       .map(_.distinct()) // multi-band matches collapse (per stored item)
 
-  private def writeIndexSegment(df: DataFrame, root: String, segId: String,
-                                buckets: Int): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir)
-    graft.ops.Layout.dropBucketedEntry(df.sparkSession, dir)
-    if (buckets > 0)
-      graft.ops.Layout.writeBucketedTable(
-        df.repartition(buckets, col("bkey")), dir, "bkey", buckets)
-    else df.write.mode("overwrite").parquet(dir)
-  }
-
-  private def writePairSegment(df: DataFrame, root: String,
-                               segId: String): Unit = {
-    val dir = segDir(root, segId)
-    graft.ops.Staging.deleteTree(dir)
-    df.write.mode("overwrite").parquet(dir)
-  }
-
-  private def openIndexSegment(spark: SparkSession, root: String,
-                               sid: String, buckets: Int): DataFrame = {
-    val d = segDir(root, sid)
-    if (buckets > 0)
-      graft.ops.Layout.readBucketedTable(spark, d, "bkey", buckets)
-    else spark.read.parquet(d)
-  }
-
   /** Build the initial index from the day-1 fingerprint frame
     * (`doc_id`, `fp`).
     */
@@ -274,31 +212,21 @@ object HammingIndex {
     */
   def read(spark: SparkSession, path: String,
            store: graft.ops.PointerStore =
-             graft.ops.PointerStore.File): HammingIndex = {
-    val v = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed hamming index at $path (missing LATEST)"))
-    val dir = graft.ops.Staging.versionDir(path, v)
-    val mf = graft.ops.Staging.readManifest(dir)
-    mf.get("fmt").filter(_ != FormatVersion).foreach(f =>
-      sys.error(s"hamming index at $path banded under '$f'; this build " +
-        s"speaks '$FormatVersion' — rebuild, do not refresh"))
-    val buckets = mf("buckets").toInt
-    val isegs = graft.ops.Staging.segList(mf, "isegs")
-    val psegs = graft.ops.Staging.segList(mf, "psegs")
+             graft.ops.PointerStore.File): HammingIndex =
+    at(spark, Spec.open(path, store))
+
+  private[graft] def at(spark: SparkSession, c: Version): HammingIndex =
     new HammingIndex(
-      () => isegs.map(sid => openIndexSegment(spark, path, sid, buckets)),
-      () => psegs.map(sid => spark.read.parquet(segDir(path, sid))),
-      maxDist = mf("maxDist").toInt, bands = mf("bands").toInt,
-      bits = mf("bits").toInt, buckets = buckets,
-      lineage = Some(Lineage(path, isegs, psegs,
-        ideltas = Seq.empty, pdeltas = Seq.empty)))
-  }
+      () => Spec.segments(spark, c, Idx), () => Spec.segments(spark, c, Prs),
+      maxDist = c("maxDist").toInt, bands = c("bands").toInt,
+      bits = c("bits").toInt, buckets = c.buckets,
+      lineage = Some(Lineage(c, ideltas = Nil, pdeltas = Nil)))
 
   /** True iff a complete committed version exists at `path`. */
   def exists(path: String,
              store: graft.ops.PointerStore =
                graft.ops.PointerStore.File): Boolean =
-    graft.ops.Staging.currentVersion(path, store).isDefined
+    Spec.exists(path, store)
 
   /** The last streaming batch id folded into the committed index
     * ([[DupGraph.lastBatchId]]'s replay-guard contract).
@@ -306,45 +234,23 @@ object HammingIndex {
   def lastBatchId(path: String,
                   store: graft.ops.PointerStore =
                     graft.ops.PointerStore.File): Option[Long] =
-    graft.ops.Staging.currentVersion(path, store).flatMap { v =>
-      graft.ops.Staging.readManifest(graft.ops.Staging.versionDir(path, v))
-        .get("batchId").map(_.toLong)
-    }
+    Spec.lastBatchId(path, store)
 
-  /** Fold both segment families back to one each ([[DupGraph.compact]]
-    * discipline: explicit, separate from ingest, no-op when already
-    * compact; `retain = 2` when run in the same fold as an ingest
-    * commit). `rebucket` re-lays the folded index segment at a new
-    * bucket count — THE way to widen the bucket space for a grown
-    * corpus (a refresh-time `buckets` change is ignored by contract:
-    * refresh segments must join the committed bucket space).
+  /** Fold both segment families back to one each
+    * ([[graft.ops.SegmentedArtifact.compact]]). `rebucket` re-lays the
+    * folded index segment at a new bucket count — THE way to widen the
+    * bucket space for a grown corpus (a refresh-time `buckets` change
+    * is ignored by contract: refresh segments must join the committed
+    * bucket space).
     */
   def compact(spark: SparkSession, path: String, retain: Int = 1,
               rebucket: Option[Int] = None,
               store: graft.ops.PointerStore =
-                graft.ops.PointerStore.File): Unit = {
-    val v0 = graft.ops.Staging.currentVersion(path, store).getOrElse(
-      sys.error(s"no committed hamming index at $path (missing LATEST)"))
-    val mf = graft.ops.Staging.readManifest(
-      graft.ops.Staging.versionDir(path, v0))
-    val isegs = graft.ops.Staging.segList(mf, "isegs")
-    val psegs = graft.ops.Staging.segList(mf, "psegs")
-    if (isegs.size <= 1 && psegs.size <= 1 &&
-      rebucket.forall(_ == mf("buckets").toInt)) return
-    val (dir, v) = graft.ops.Staging.nextVersionDir(path, store)
-    val buckets = rebucket.getOrElse(mf("buckets").toInt)
-    graft.ops.Staging.parJobs(
-      () => writeIndexSegment(
-        isegs.map(sid => spark.read.parquet(segDir(path, sid)))
-          .reduce(_.unionByName(_)), path, s"i$v", buckets),
-      () => writePairSegment(
-        psegs.map(sid => spark.read.parquet(segDir(path, sid)))
-          .reduce(_.unionByName(_)), path, s"p$v"))
-    graft.ops.Staging.writeManifest(dir,
-      (mf - "isegs" - "psegs") ++ Map("isegs" -> s"i$v", "psegs" -> s"p$v",
-        "buckets" -> buckets.toString))
-    graft.ops.Staging.commitVersion(path, v, retain, store)
-    graft.ops.Staging.gcSegments(path, SegKeys,
-      d => graft.ops.Layout.dropBucketedEntry(spark, d), store)
-  }
+                graft.ops.PointerStore.File): Unit =
+    Spec.compact(path, retain, store,
+      params = rebucket.map(b => "buckets" -> b.toString).toMap,
+      force = c => rebucket.exists(_ != c.buckets)) { c =>
+      Seq(Idx -> (() => Spec.folded(spark, c, Idx)),
+        Prs -> (() => Spec.folded(spark, c, Prs)))
+    }
 }

@@ -86,112 +86,4 @@ object Layout {
                      numPartitions: Int): Unit =
     clusterByZOrder(df, dims, numPartitions)
       .write.mode("overwrite").parquet(path)
-
-  // ==================================================================
-  // Bucketed durable artifacts (the co-located-join layout)
-  // ==================================================================
-  //
-  // A hash-bucketed, bucket-sorted parquet table on a join key is the
-  // layout that makes the STORED side of a recurring join exchange-free:
-  // Spark's bucket hash is the same murmur3 the shuffle uses, so a scan
-  // over the bucketed files reports HashPartitioning(key, buckets) and
-  // a join against it shuffles only the other side. At 100 TB this is
-  // the difference between "a refresh pays the batch's shuffle" and
-  // "every refresh re-shuffles the corpus". One audited copy here —
-  // the dup-graph index, the ANN code table, and the novelty
-  // seen-shingle index all commit through these.
-
-  private val bucketedLock = new Object
-  private def bucketedName(dir: String): String =
-    "graft_bkt_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-
-  /** Write `df` as a hash-bucketed, bucket-sorted parquet table on
-    * `key` at exactly `dir` — Spark's bucketed layout needs a catalog
-    * entry at write time, so this routes through a transient
-    * external-table name and drops the entry afterwards (external drop
-    * keeps the files; the bucket ids live in the file NAMES, which is
-    * what the bucketed read resolves). Pre-partition the input on
-    * `key` with the same bucket count to make each write task emit one
-    * bucket file (no writer-side fan-out).
-    *
-    * The target must not exist (bucketed CTAS refuses a non-empty
-    * location): artifact writers route the dir through
-    * [[graft.ops.Staging.nextVersionDir]] or delete a deterministic
-    * segment dir first — crash-retry then sees a clean target.
-    */
-  def writeBucketedTable(df: DataFrame, dir: String, key: String,
-                         buckets: Int): Unit = {
-    val spark = df.sparkSession
-    val tmp = s"graft_bktw_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    df.write.bucketBy(buckets, key).sortBy(key)
-      .option("path", dir).saveAsTable(tmp)
-    spark.sql(s"DROP TABLE `$tmp`")
-    // An EMPTY bucketed CTAS writes no data files at all (only
-    // _SUCCESS) — a later read has no parquet footer to infer a schema
-    // from and the artifact is bricked. Empty frames are legitimate
-    // (a micro-batch of all-too-short docs contributes zero index
-    // rows), so rewrite such a dir as one plain schema-bearing parquet
-    // file plus a marker the reader keys on; partitioning is
-    // irrelevant for zero rows. Detected from the write's own OUTPUT
-    // (a metadata listing — the AnnIndex.writeCodeSegment discipline),
-    // not a pre-write `df.isEmpty` probe: that probe was an extra
-    // Spark job per segment commit that RE-EVALUATED the whole input
-    // plan when the caller's delta was not yet materialized (the
-    // day-1 build paid its corpus shingle scan twice).
-    if (!graft.ops.Staging.list(dir).exists(_.startsWith("part-"))) {
-      graft.ops.Staging.deleteTree(dir)
-      df.limit(0).coalesce(1).write.parquet(dir)
-      graft.ops.Staging.writeString(s"$dir/$EmptyMarker", "")
-    }
-    ()
-  }
-
-  /** Marker file [[writeBucketedTable]] leaves in an EMPTY segment dir
-    * (written plain — bucket-file-name resolution has nothing to parse
-    * for zero rows); [[readBucketedTable]] reads such dirs as plain
-    * parquet.
-    */
-  private val EmptyMarker = "_GRAFT_EMPTY"
-
-  /** Open a bucketed table written by [[writeBucketedTable]]:
-    * (re)register a deterministic external-table entry over `dir`
-    * carrying the bucket spec, so the scan reports
-    * HashPartitioning(`key`, buckets) and joins against it need no
-    * Exchange on this side. The entry name is content-addressed by the
-    * directory and the directory is immutable once committed, so an
-    * existing entry is always a match — reads REUSE it instead of
-    * drop+recreate (a drop would race a concurrent reader's in-flight
-    * resolution), and creation is serialized per JVM. Entries for
-    * GC'd artifact versions are dropped by the artifact writers via
-    * [[dropBucketedEntry]].
-    */
-  def readBucketedTable(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, key: String, buckets: Int): DataFrame =
-    bucketedLock.synchronized {
-      if (graft.ops.Staging.exists(s"$dir/$EmptyMarker"))
-        return spark.read.parquet(dir) // empty segment, written plain
-      val name = bucketedName(dir)
-      if (!spark.catalog.tableExists(name)) {
-        // CLUSTERED BY requires an explicit column list — take it from
-        // the parquet footers (id column type is caller-defined)
-        val ddl = spark.read.parquet(dir).schema.toDDL
-        spark.sql(s"CREATE TABLE `$name` ($ddl) USING parquet " +
-          s"CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $buckets BUCKETS " +
-          s"LOCATION '$dir'")
-      }
-      spark.table(name)
-    }
-
-  /** Drop the catalog entry [[readBucketedTable]] registered for `dir`
-    * (no-op if none) — the GC hook artifact writers call when a
-    * superseded version/segment directory is deleted, so entries never
-    * accumulate across versions.
-    */
-  def dropBucketedEntry(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Unit =
-    bucketedLock.synchronized {
-      spark.sql(s"DROP TABLE IF EXISTS `${bucketedName(dir)}`")
-      ()
-    }
 }

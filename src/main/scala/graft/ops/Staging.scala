@@ -9,10 +9,10 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Shared filesystem plumbing for the staged-promote and
-  * versioned-pointer write disciplines (one audited copy — Dedup's
-  * durable graph, AnnIndex, PretrainDemo's shard promote, and the
-  * fixture tools all route through here; crash-safety code that exists
-  * twice drifts).
+  * versioned-pointer write disciplines (one audited copy — the durable
+  * index artifacts through [[SegmentedArtifact]], PretrainDemo's shard
+  * promote, and the fixture tools all route through here;
+  * crash-safety code that exists twice drifts).
   *
   * ==Portability contract==
   * All paths go through the Hadoop `FileSystem`/`FileContext` API, so
@@ -332,11 +332,10 @@ object Staging {
   }
 
   /** Sweep `root/segments/` entries referenced by NO version manifest
-    * inside the retention window — the GC half of the
-    * segment-incremental commit discipline (immutable segments under
-    * `root/segments/`, version manifests listing the live ones by id;
-    * Dedup's DupGraph, AnnIndex, and NoveltyIndex all commit this
-    * way). `segKeys` names the manifest keys carrying comma-separated
+    * inside the retention window — the GC half of
+    * [[SegmentedArtifact.commit]] (immutable segments under
+    * `root/segments/`, version manifests listing the live ones by
+    * id). `segKeys` names the manifest keys carrying comma-separated
     * segment-id lists; `onDelete` runs per swept dir (e.g.
     * bucketed-catalog cleanup). Runs after a commit: a reader inside
     * the retention window is safe because its version's manifest still
@@ -413,7 +412,7 @@ object Staging {
   }
 
   /** Read a manifest written by [[writeManifest]]; empty map if the
-    * version predates manifests.
+    * version has none.
     */
   def readManifest(dir: String): Map[String, String] = {
     val p = s"$dir/manifest"

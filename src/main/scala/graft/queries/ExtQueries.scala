@@ -2907,9 +2907,10 @@ object ExtQueries {
     Some(duckNoveltySql))
 
   /** [EXT] L119 durable-artifact COMPACTION under the cross-engine
-    * gate ([[NoveltyIndex.compact]] — the segment-fold discipline all
-    * three artifact lifecycles share): the `q_novelty_refresh` loop
-    * with a compaction spliced in — build(b1) → commit → read → score
+    * gate ([[NoveltyIndex.compact]] — the segment fold all four
+    * artifacts share, [[graft.ops.SegmentedArtifact.compact]]): the
+    * `q_novelty_refresh` loop with a compaction spliced in —
+    * build(b1) → commit → read → score
     * b2 → fold b2 in → commit (two live segments) → COMPACT (one
     * folded segment, superseded versions swept to the retention
     * window) → re-read → score b3 against the COMPACTED artifact. The
@@ -2920,7 +2921,7 @@ object ExtQueries {
     * some doc's novelty rate (or crash the b2 scoring, which
     * evaluates lazily AFTER the compact) and break the hash — its
     * INVISIBILITY is what this row proves (the `q_ann_retrain` rule
-    * applied to segment folding). `maybeCompact`-driven auto-triggers
+    * applied to segment folding). `Maintenance.fold`'s auto-triggers
     * are additionally soak-pinned in StreamingIndexesSpec; this row
     * puts the rewrite itself under the per-round DuckDB hash.
     *

@@ -60,50 +60,28 @@ object StreamingDedup {
       }
       .start()
 
-  /** One micro-batch's fold — build on first contact, refresh after,
-    * SKIP on replay (spec-pinned directly: the guard is the
-    * correctness boundary, not the stream wiring). After the commit,
-    * the shared auto-compaction policy ([[Maintenance.maybeCompact]])
-    * folds the segment stack back to one triple whenever any of the
-    * graph's three segment lists exceeds `compactEvery` — per-batch
-    * fold cost and read amplification stay bounded for arbitrarily
-    * long streams instead of growing one segment per batch.
+  /** One micro-batch's fold ([[Maintenance.fold]]) — build on first
+    * contact, refresh after, SKIP on replay (spec-pinned directly: the
+    * guard is the correctness boundary, not the stream wiring). After
+    * the commit, auto-compaction folds the segment stack back to one
+    * triple whenever any of the graph's three segment lists exceeds
+    * `compactEvery`.
     */
   private[graft] def foldBatch(batch: DataFrame, path: String,
                                batchId: Long,
                                compactEvery: Int =
                                  Maintenance.DefaultCompactEvery,
                                store: graft.ops.PointerStore =
-                                 graft.ops.PointerStore.File): Unit =
-    // one writer lease per fold (the shared [[Maintenance]] exclusion
-    // contract): a second uncoordinated maintainer on this artifact
-    // fails HERE, before reading state or staging a version dir
-    Maintenance.withWriterLease("StreamingDedup", path, store) {
+                                 graft.ops.PointerStore.File): Unit = {
     val spark = batch.sparkSession
-    // the probe is the COMMIT POINTER, not a table dir: a version
-    // is discoverable only after write()'s atomic pointer swap, so
-    // a crash mid-write can never make a restarted loop mistake a
-    // partial graph for "nothing stored" and silently rebuild from
-    // one batch
-    val stored = DupGraph.exists(path, store)
-    // Replay discrimination (the shared [[Maintenance]] contract): skip
-    // only the exact last batch re-delivered after a crash (idempotent
-    // sink); fail loudly on an id below the stored one — a fresh
-    // checkpoint against this graph would otherwise silently drop every
-    // real batch until its counter caught up.
-    val last = if (stored) DupGraph.lastBatchId(path, store) else None
-    if (Maintenance.shouldFold("StreamingDedup", path, batchId, last)) {
-      val g =
-        if (!stored) Dedup.dupGraph(batch, col("text"), col("doc_id"))
-        else Dedup.refreshDupGraph(DupGraph.read(spark, path, store),
-          batch, col("text"), col("doc_id"))
+    Maintenance.fold("StreamingDedup", DupGraph.Spec, path, batchId,
+      compactEvery, store) { cur =>
+      val g = cur.fold(Dedup.dupGraph(batch, col("text"), col("doc_id")))(
+        c => Dedup.refreshDupGraph(DupGraph.at(spark, c), batch,
+          col("text"), col("doc_id")))
       try g.write(path, batchId = Some(batchId), store = store)
       finally g.unpersist()
-      Maintenance.maybeCompact(path, Seq("isegs", "psegs", "clsegs"),
-        compactEvery, store) {
-        DupGraph.compact(spark, path, retain = 2, store = store)
-      }
-    }
-    ()
+      true
+    } { DupGraph.compact(spark, path, retain = 2, store = store) }
   }
 }

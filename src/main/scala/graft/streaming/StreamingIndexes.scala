@@ -20,7 +20,7 @@ private[graft] object Maintenance {
 
   /** Run one fold under the artifact's writer lease
     * ([[graft.ops.Staging.acquireWriter]]) — the enforcement of
-    * single-writer-per-artifact all three maintainers share. A second
+    * single-writer-per-artifact every maintainer shares. A second
     * uncoordinated maintainer on the same artifact fails at acquire,
     * BEFORE reading state or staging a version dir (the two-writer
     * version-dir clobber window is closed at its entry, not at
@@ -32,8 +32,9 @@ private[graft] object Maintenance {
     * File = best-effort lock file — the [[graft.ops.PointerStore]]
     * contract).
     */
-  def withWriterLease[A](what: String, path: String,
-                         store: graft.ops.PointerStore)(fold: => A): A = {
+  private def withWriterLease[A](what: String, path: String,
+                                 store: graft.ops.PointerStore)
+                                (fold: => A): A = {
     val lease =
       try graft.ops.Staging.acquireWriter(path, store)
       catch {
@@ -46,8 +47,8 @@ private[graft] object Maintenance {
   /** True ⇒ fold the batch; false ⇒ exact-last replay, skip. Throws on
     * a checkpoint/artifact mismatch.
     */
-  def shouldFold(what: String, path: String, batchId: Long,
-                 stored: Option[Long]): Boolean = {
+  private def shouldFold(what: String, path: String, batchId: Long,
+                         stored: Option[Long]): Boolean = {
     stored.filter(batchId < _).foreach(l => throw new IllegalStateException(
       s"$what: micro-batch id $batchId is below the artifact's " +
         s"last-applied batch id $l at $path — the stream's checkpoint " +
@@ -57,32 +58,41 @@ private[graft] object Maintenance {
     !stored.contains(batchId)
   }
 
-  /** Auto-compaction policy shared by the three maintainers: after a
-    * fold commits, count the committed version's live segments
-    * (metadata-only — one manifest read) and run the artifact's
-    * `compact` when any `segKeys` list exceeds `threshold`. Without
+  /** One maintainer fold of `art` at `path`, the sequence every
+    * streaming maintainer shares: take the writer lease
+    * ([[withWriterLease]]); resolve the committed version ONCE (pointer
+    * + manifest, format-checked) — through the commit pointer, so a
+    * crash mid-write never looks like "nothing stored" and silently
+    * rebuilds from one batch; apply the replay guard ([[shouldFold]]);
+    * run `step` — build on first contact (None) or refresh the
+    * committed version, then write; it returns whether it committed —
+    * and then the auto-compaction policy.
+    *
+    * Auto-compaction: after a fold commits, count the committed
+    * version's live segments (metadata-only) and run `compact` when
+    * any of the spec's segment lists exceeds `compactEvery`. Without
     * this, segment count grows one per batch FOREVER and both read
     * amplification (one scan per segment) and per-batch fold cost (one
     * anti-join / probe-join per stored segment) grow with stream age —
     * the classic unbounded-LSM failure. With it, cost is amortized:
-    * one corpus-sized rewrite every ~`threshold` batches, segment
-    * count bounded by `threshold`+1 observed between folds. A trigger
-    * fold commits TWICE (ingest, then compact), so the compact commit
-    * must pass `retain = 2` to its versioned-pointer commit — a reader
-    * that was current at fold start is two commits stale by fold end
-    * and must still resolve complete segments (the fold-current-reader
-    * contract a single-commit fold gives for free). `threshold <= 0`
-    * disables.
+    * one corpus-sized rewrite every ~`compactEvery` batches. A trigger
+    * fold commits TWICE (ingest, then compact), so `compact` must pass
+    * `retain = 2` — a reader that was current at fold start is two
+    * commits stale by fold end and must still resolve complete
+    * segments. `compactEvery <= 0` disables.
     */
-  def maybeCompact(path: String, segKeys: Seq[String], threshold: Int,
-                   store: graft.ops.PointerStore =
-                     graft.ops.PointerStore.File)
-                  (compact: => Unit): Unit = {
-    if (threshold > 0 && segmentCount(path, segKeys, store) > threshold)
-      compact
-  }
+  def fold(what: String, art: graft.ops.SegmentedArtifact, path: String,
+           batchId: Long, compactEvery: Int, store: graft.ops.PointerStore)
+          (step: Option[graft.ops.SegmentedArtifact.Version] => Boolean)
+          (compact: => Unit): Unit =
+    withWriterLease(what, path, store) {
+      val cur = art.current(path, store)
+      if (shouldFold(what, path, batchId, cur.flatMap(_.batchId)) &&
+        step(cur) && compactEvery > 0 &&
+        segmentCount(path, art.segKeys, store) > compactEvery) compact
+    }
 
-  /** Default segment-count threshold for [[maybeCompact]]: high enough
+  /** Default segment-count threshold for auto-compaction: high enough
     * that the corpus rewrite amortizes to ~1/16 of a full rebuild per
     * batch, low enough that read amplification (segments scanned per
     * novelty/probe/refresh join) stays single-digit-small.
@@ -152,35 +162,28 @@ object StreamingNovelty {
                                onReport: Option[(Long, DataFrame) => Unit] =
                                  None,
                                store: graft.ops.PointerStore =
-                                 graft.ops.PointerStore.File): Unit =
-    Maintenance.withWriterLease("StreamingNovelty", path, store) {
+                                 graft.ops.PointerStore.File): Unit = {
     val spark = batch.sparkSession
-    val stored = NoveltyIndex.exists(path, store)
-    val last = if (stored) NoveltyIndex.lastBatchId(path, store) else None
-    if (Maintenance.shouldFold("StreamingNovelty", path, batchId, last)) {
-      val idx =
-        if (!stored)
-          NoveltyIndex.build(batch, col("text"), col("doc_id"), n, buckets)
-        else {
-          val stored = NoveltyIndex.read(spark, path, store)
-          // mixing shingle widths joins incompatible spaces — the same
-          // loud refusal refreshDupGraph makes; silently folding with
-          // the stored width while the caller believes they changed it
-          // would diverge without an error. (`buckets` is a build-time
-          // layout property: the stored artifact's count always wins.)
-          require(n == stored.n,
-            s"StreamingNovelty: shingle width $n != stored index's " +
-              s"${stored.n} at $path — rebuild, do not mix widths")
-          onReport.foreach(f =>
-            f(batchId, stored.novelty(batch, col("text"), col("doc_id"))))
-          stored.update(batch, col("text"), col("doc_id"))
-        }
-      idx.write(path, batchId = Some(batchId), store = store)
-      Maintenance.maybeCompact(path, Seq("ssegs"), compactEvery, store) {
-        NoveltyIndex.compact(spark, path, retain = 2, store = store)
+    Maintenance.fold("StreamingNovelty", NoveltyIndex.Spec, path, batchId,
+      compactEvery, store) { cur =>
+      val idx = cur.fold(NoveltyIndex.build(batch, col("text"),
+          col("doc_id"), n, buckets)) { c =>
+        val stored = NoveltyIndex.at(spark, c)
+        // mixing shingle widths joins incompatible spaces — the same
+        // loud refusal refreshDupGraph makes; silently folding with
+        // the stored width while the caller believes they changed it
+        // would diverge without an error. (`buckets` is a build-time
+        // layout property: the stored artifact's count always wins.)
+        require(n == stored.n,
+          s"StreamingNovelty: shingle width $n != stored index's " +
+            s"${stored.n} at $path — rebuild, do not mix widths")
+        onReport.foreach(f =>
+          f(batchId, stored.novelty(batch, col("text"), col("doc_id"))))
+        stored.update(batch, col("text"), col("doc_id"))
       }
-    }
-    ()
+      idx.write(path, batchId = Some(batchId), store = store)
+      true
+    } { NoveltyIndex.compact(spark, path, retain = 2, store = store) }
   }
 }
 
@@ -258,17 +261,15 @@ object StreamingAnn {
       "StreamingAnn: retrainBelowInertia needs retrainCorpus — PQ codes " +
         "are lossy, so a retrain must re-read the corpus VECTORS from " +
         "the lake, which only the caller can supply")
-    Maintenance.withWriterLease("StreamingAnn", path, store) {
     val spark = batch.sparkSession
-    val stored = AnnIndex.exists(path, store)
-    val last = if (stored) AnnIndex.lastBatchId(path, store) else None
-    if (Maintenance.shouldFold("StreamingAnn", path, batchId, last)) {
+    Maintenance.fold("StreamingAnn", AnnIndex.Spec, path, batchId,
+      compactEvery, store) { cur =>
       val norms = Similarity.withNorm(batch, col("vec_id"), col("embedding"))
       var drifted = false
-      val idx =
-        if (!stored) bootstrapTrain(norms, m, subDim)
-        else {
-          val storedIdx = AnnIndex.read(spark, path, store)
+      val idx = cur match {
+        case None => bootstrapTrain(norms, m, subDim)
+        case Some(c) =>
+          val storedIdx = AnnIndex.at(spark, c)
           require(m == storedIdx.m && subDim == storedIdx.subDim,
             s"StreamingAnn: (m=$m, subDim=$subDim) != stored index's " +
               s"(m=${storedIdx.m}, subDim=${storedIdx.subDim}) at $path " +
@@ -280,33 +281,26 @@ object StreamingAnn {
             drifted = retrainBelowInertia.exists(inertia < _)
           }
           Some(storedIdx.refresh(norms))
-        }
+      }
       // a bootstrap batch with no trainable vectors commits NOTHING
       // (not even the batchId): the next non-empty batch bootstraps,
       // and a replay of the skipped batch is a harmless re-skip
-      idx.foreach { i =>
-        i.write(path, batchId = Some(batchId), store = store)
-        if (drifted) {
-          // ingest-first, then the full-generation recommit: second
-          // commit of this fold ⇒ retain = 2 (reader-retention rule).
-          // Seeds get the bootstrap fallback — an id space the default
-          // modulo predicate misses must defer gracefully (next drifted
-          // batch re-arms), never kill the stream on the empty-seed
-          // require.
-          val corpusNorms = Similarity.withNorm(retrainCorpus.get(),
-            col("vec_id"), col("embedding"))
-          fallbackSeedPred(corpusNorms).foreach(p =>
-            AnnIndex.retrain(spark, path, corpusNorms,
-              ivfSeedPred = p, pqSeedPred = p, retain = 2, store = store))
-        } else {
-          Maintenance.maybeCompact(path, Seq("csegs"), compactEvery, store) {
-            AnnIndex.compact(spark, path, retain = 2, store = store)
-          }
-        }
+      idx.foreach(_.write(path, batchId = Some(batchId), store = store))
+      if (drifted) {
+        // ingest-first, then the full-generation recommit: second
+        // commit of this fold ⇒ retain = 2 (reader-retention rule).
+        // Seeds get the bootstrap fallback — an id space the default
+        // modulo predicate misses must defer gracefully (next drifted
+        // batch re-arms), never kill the stream on the empty-seed
+        // require.
+        val corpusNorms = Similarity.withNorm(retrainCorpus.get(),
+          col("vec_id"), col("embedding"))
+        fallbackSeedPred(corpusNorms).foreach(p =>
+          AnnIndex.retrain(spark, path, corpusNorms,
+            ivfSeedPred = p, pqSeedPred = p, retain = 2, store = store))
       }
-    }
-    ()
-    }
+      idx.isDefined && !drifted
+    } { AnnIndex.compact(spark, path, retain = 2, store = store) }
   }
 
   /** Mean batch-to-stored-centroid cosine ([[Similarity.kmeansInertia]]
@@ -409,34 +403,26 @@ object StreamingHamming {
                                compactEvery: Int =
                                  Maintenance.DefaultCompactEvery,
                                store: graft.ops.PointerStore =
-                                 graft.ops.PointerStore.File): Unit =
-    Maintenance.withWriterLease("StreamingHamming", path, store) {
-      val spark = batch.sparkSession
-      val stored = HammingIndex.exists(path, store)
-      val last = if (stored) HammingIndex.lastBatchId(path, store) else None
-      if (Maintenance.shouldFold("StreamingHamming", path, batchId, last)) {
-        val idx =
-          if (!stored)
-            HammingIndex.build(batch, maxDist, bands, bits, buckets)
-          else {
-            val storedIdx = HammingIndex.read(spark, path, store)
-            // mixing banding schemes joins incompatible bucket spaces —
-            // the StreamingNovelty width rule, applied to all three
-            // parameters that define the pair semantics
-            require(maxDist == storedIdx.maxDist &&
-                bands == storedIdx.bands && bits == storedIdx.bits,
-              s"StreamingHamming: (maxDist=$maxDist, bands=$bands, " +
-                s"bits=$bits) != stored index's (${storedIdx.maxDist}, " +
-                s"${storedIdx.bands}, ${storedIdx.bits}) at $path — " +
-                "rebuild, do not mix banding schemes")
-            storedIdx.refresh(batch)
-          }
-        idx.write(path, batchId = Some(batchId), store = store)
-        Maintenance.maybeCompact(path, Seq("isegs", "psegs"),
-          compactEvery, store) {
-          HammingIndex.compact(spark, path, retain = 2, store = store)
-        }
+                                 graft.ops.PointerStore.File): Unit = {
+    val spark = batch.sparkSession
+    Maintenance.fold("StreamingHamming", HammingIndex.Spec, path, batchId,
+      compactEvery, store) { cur =>
+      val idx = cur.fold(
+        HammingIndex.build(batch, maxDist, bands, bits, buckets)) { c =>
+        val storedIdx = HammingIndex.at(spark, c)
+        // mixing banding schemes joins incompatible bucket spaces —
+        // the StreamingNovelty width rule, applied to all three
+        // parameters that define the pair semantics
+        require(maxDist == storedIdx.maxDist &&
+            bands == storedIdx.bands && bits == storedIdx.bits,
+          s"StreamingHamming: (maxDist=$maxDist, bands=$bands, " +
+            s"bits=$bits) != stored index's (${storedIdx.maxDist}, " +
+            s"${storedIdx.bands}, ${storedIdx.bits}) at $path — " +
+            "rebuild, do not mix banding schemes")
+        storedIdx.refresh(batch)
       }
-      ()
-    }
+      idx.write(path, batchId = Some(batchId), store = store)
+      true
+    } { HammingIndex.compact(spark, path, retain = 2, store = store) }
+  }
 }

@@ -959,39 +959,13 @@ class DedupSpec extends SparkSpec {
     assert(fresh.clusters.as[(Long, Long)].collect().toSet == expectClusters)
   }
 
-  test("legacy pre-manifest artifact: read flags guessed parameters and " +
-      "refresh trusts the caller's explicit ones instead of rejecting") {
-    val d1 = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val d2 = Seq((2L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("dupgraph_legacy").toString
-    // hand-lay the pre-segment, pre-manifest layout: three plain tables
-    // in the version dir, pointer, NO manifest — built with n=4/0.7
-    val g = Dedup.dupGraph(d1, col("text"), col("doc_id"), n = 4, threshold = 0.7)
-    try {
-      g.pairs.write.parquet(s"$dir/v1/pairs")
-      g.clusters.write.parquet(s"$dir/v1/clusters")
-      g.index.write.parquet(s"$dir/v1/index")
-    } finally g.unpersist()
-    graft.ops.Staging.writeString(s"$dir/LATEST", "1")
-    val stored = DupGraph.read(spark, dir)
-    // defaults are guesses (n=3, 0.5) — the caller's correct explicit
-    // parameters must WIN, not be rejected against the guess
-    val r = Dedup.refreshDupGraph(stored, d2, col("text"), col("doc_id"),
-      n = 4, threshold = 0.7)
-    try {
-      assert(r.n == 4 && r.threshold == 0.7)
-      // and the refresh actually joined in the stored space: the two
-      // identical docs pair up
-      assert(r.pairs.select("da", "db").as[(Long, Long)].collect().toSet ==
-        Set((1L, 2L)))
-    } finally r.unpersist()
-  }
-
-  test("compact on a legacy pre-segmented artifact is a no-op (both " +
-      "keepPairs modes), not a reduce-of-empty crash") {
+  test("legacy pre-segment, pre-manifest artifact: read and compact " +
+      "fail loudly with the rebuild message instead of guessing") {
     val d1 = Seq((1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("dupgraph_lc").toString
+    val dir = java.nio.file.Files.createTempDirectory("dupgraph_legacy").toString
+    // hand-lay the pre-segment, pre-manifest layout: three plain tables
+    // in the version dir, pointer, NO manifest
     val g = Dedup.dupGraph(d1, col("text"), col("doc_id"))
     try {
       g.pairs.write.parquet(s"$dir/v1/pairs")
@@ -999,16 +973,13 @@ class DedupSpec extends SparkSpec {
       g.index.write.parquet(s"$dir/v1/index")
     } finally g.unpersist()
     graft.ops.Staging.writeString(s"$dir/LATEST", "1")
-    val before = DupGraph.read(spark, dir).clusters
-      .as[(Long, Long)].collect().toSet
-    // pre-fix, keepPairs=false fell past the compact-already early
-    // returns (psegs empty, so the prune probe could not fire) and
-    // threw UnsupportedOperationException on reduce of the empty isegs
-    DupGraph.compact(spark, dir, keepPairs = false)
-    DupGraph.compact(spark, dir, keepPairs = true)
+    for (op <- Seq[() => Any](() => DupGraph.read(spark, dir),
+        () => DupGraph.compact(spark, dir, keepPairs = false))) {
+      val e = intercept[RuntimeException](op())
+      assert(e.getMessage.contains("no manifest") &&
+        e.getMessage.contains("Rebuild"), e.getMessage)
+    }
     assert(graft.ops.Staging.currentVersion(dir).contains(1L),
-      "legacy no-op must not commit a new version")
-    assert(DupGraph.read(spark, dir).clusters
-      .as[(Long, Long)].collect().toSet == before)
+      "a refused legacy artifact must not gain a version")
   }
 }
